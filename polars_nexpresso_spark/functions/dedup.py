@@ -26,10 +26,9 @@ reproduce signatures bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from polars_nexpresso_spark.functions.text import (
     tokens,
@@ -536,97 +535,8 @@ def embedding_cosine_pairs(
     )
 
 
-_EDGE_ROW_BYTES = 32  # two 64-bit ids + per-row overhead, deliberately generous
-
-
-def _propagation_knob(spark, key: str, env: str, default: float) -> float:
-    """Scale knob: session conf first, env var second, default last —
-    the bench's local defaults stay untouched while a cluster deploy can
-    re-point the gate without code changes."""
-    try:
-        raw = spark.conf.get(key, None)
-    except Exception:  # noqa: BLE001 — Connect without conf passthrough
-        raw = None
-    if raw is None:
-        raw = os.environ.get(env)
-    try:
-        return float(raw) if raw is not None else default
-    except ValueError:
-        return default
-
-
-def _resolve_propagation(propagate: str, node_ids: DataFrame, edges: DataFrame):
-    """Pick :func:`dedup_clusters`'s iteration set; returns ``(mode,
-    edges)`` with ``edges`` checkpointed appropriately for the mode.
-
-    ``"adaptive"`` fires the edge-bounded loop only when BOTH driver-side
-    stats agree it pays (guide §2.1/§2.4 — shuffle corpus-sized frames as
-    few times as possible):
-
-    - the corpus id projection's Catalyst scan estimate exceeds
-      ``minNodesBytesForEdgeLoop`` (default 256 MiB — far above any
-      local-bench input, far below any production corpus), so the
-      per-iteration corpus-sized shuffles are worth two extra stitch
-      joins; and
-    - the MATERIALIZED edge list is small relative to it. Catalyst's
-      static estimate for the derived pairs plan is useless here (join
-      selectivities multiply: measured 4.5e22 "bytes" for a 594 KB
-      corpus), so the ratio reads the real pinned row count instead —
-      free at this point, because the loop is about to materialize
-      ``edges`` anyway and counting pinned blocks launches no recompute.
-
-    Everything falls back to the classic full loop (today's behavior) on
-    Spark Connect or missing stats — the probe failing must never make
-    the plan worse.
-    """
-    if propagate not in ("adaptive", "full", "edges"):
-        raise ValueError(
-            f"propagate must be 'adaptive', 'full' or 'edges', got "
-            f"{propagate!r}"
-        )
-    if propagate == "full":
-        return "full", edges.localCheckpoint(eager=False)
-    if propagate == "edges":
-        return "edges", edges.localCheckpoint(eager=True)
-    try:
-        from polars_nexpresso_spark.plans.stats import plan_size_bytes
-
-        nodes_bytes = plan_size_bytes(node_ids)
-    except Exception:  # noqa: BLE001 — Connect: no plan handle
-        return "full", edges.localCheckpoint(eager=False)
-    if nodes_bytes >= 1 << 60:
-        # Catalyst returns spark.sql.defaultSizeInBytes (Long.MaxValue)
-        # for leaves without stats (LogicalRDD, some views): that is
-        # "unknown", not "huge" — keep today's loop.
-        return "full", edges.localCheckpoint(eager=False)
-    spark = node_ids.sparkSession
-    floor = _propagation_knob(
-        spark,
-        "spark.pns.dedupClusters.minNodesBytesForEdgeLoop",
-        "PNS_DEDUP_EDGE_MIN_NODES_BYTES",
-        256.0 * 1024 * 1024,
-    )
-    if nodes_bytes < floor:
-        return "full", edges.localCheckpoint(eager=False)
-    frac = _propagation_knob(
-        spark,
-        "spark.pns.dedupClusters.maxEdgesFracForEdgeLoop",
-        "PNS_DEDUP_EDGE_MAX_FRAC",
-        0.25,
-    )
-    edges = edges.localCheckpoint(eager=True)
-    if edges.count() * _EDGE_ROW_BYTES <= nodes_bytes * frac:
-        return "edges", edges
-    return "full", edges
-
-
 def dedup_clusters(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    *,
-    max_iter: int = 25,
-    propagate: str = "adaptive",
+    nodes: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:
     """Canonicalize near-duplicate PAIRS into connected-component clusters.
 
@@ -638,100 +548,99 @@ def dedup_clusters(
 
     Returns ``(id, cluster_id)`` for EVERY row of ``nodes`` where
     ``cluster_id`` is the smallest id in the component (singletons map to
-    themselves) — filter ``id == cluster_id`` for the keep set.
+    themselves; string ids compare in Spark's UTF-8 byte order) — filter
+    ``id == cluster_id`` for the keep set.
 
-    Scale design: iterative min-label propagation (the standard
-    two-relation connected-components loop). Each round is one equi-join of
-    the edge list against the current labels plus a min-aggregation —
-    both shuffles are on ids, and the edge list is near-dup pairs, which is
-    tiny relative to the corpus. Rounds needed = component diameter (near-
-    dup clusters are shallow; ``max_iter`` is a safety bound, convergence
-    is detected exactly). Lineage is truncated per round with
-    ``localCheckpoint`` so the plan does not grow with iterations — the
-    driver loop only orchestrates; all data work is distributed. NOTE:
-    those per-round eager checkpoints mean merely CONSTRUCTING the result
-    runs Spark jobs (the loop executes during the call, the returned frame
-    is a cheap read of the last pinned round).
+    Scale design: the components are found in ONE task. The pair list,
+    projected to its two ids and cast to the nodes' id type, is shuffled
+    to a single partition and handed to a numpy union-find through
+    ``mapInArrow``. The answer is exact at any component diameter: there
+    is no iteration cap, the union-find runs until no edge joins two
+    different roots. One left join stitches the labels back onto
+    ``nodes`` (ids in no pair keep their own id) and one eager
+    ``localCheckpoint`` pins the result, so constructing it runs the
+    Spark jobs and the returned frame is a cheap read of pinned blocks.
 
-    r14 convergence read (guide §2.4): each round's self rows carry the
-    previous label into the min-aggregation as ``__old`` (``min`` ignores
-    the NULLs on neighbor rows), so "did anything change" is a
-    filter+limit over the round's OWN checkpointed blocks instead of the
-    old corpus-wide ``combined ⋈ labels`` re-join — one join and one
-    corpus-sized shuffle fewer per iteration, identical decision (an id
-    first reached this round has no self row → NULL ``__old`` → excluded,
-    exactly like the old inner join).
-
-    ``propagate`` selects the iteration set: ``"full"`` loops over every
-    node (the classic loop), ``"edges"`` loops only over nodes incident to
-    at least one pair — bounded by 2·|pairs| rows; untouched nodes can
-    never change label, so they are stitched back as self-label singletons
-    at the end and the results are identical — and ``"adaptive"``
-    (default) picks per input via :func:`_resolve_propagation`: the edge
-    loop when the corpus is large and the edge list is relatively small
-    (per-iteration exchanges become pair-bounded — the 100 TB shape), the
-    classic loop otherwise (locally the two extra stitch joins cost more
-    than the tiny iterations save — measured 1.10× at sf0.1, r13). Knobs:
-    ``spark.pns.dedupClusters.minNodesBytesForEdgeLoop`` (env
-    ``PNS_DEDUP_EDGE_MIN_NODES_BYTES``, default 256 MiB) and
-    ``spark.pns.dedupClusters.maxEdgesFracForEdgeLoop`` (env
-    ``PNS_DEDUP_EDGE_MAX_FRAC``, default 0.25).
+    The trade: that one Python worker holds the whole pair list. With
+    64-bit ids it peaks at about 130 B per pair, input included (measured
+    at 10⁷ pairs, mostly ``np.unique``'s sort buffers), so 10⁸ pairs
+    need about 13 GB; the corpus never enters it. This is the
+    single-task cluster stage of web-scale MinHash pipelines — the
+    near-duplicate graph is sparse, so the edge list stays far smaller
+    than the corpus it was found in.
     """
-    # Undirected edge list, both directions.
-    ab = pairs.select(F.col("id_a").alias("__src"), F.col("id_b").alias("__dst"))
-    edges = ab.unionByName(
-        ab.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-    ).distinct()
-
     node_ids = nodes.select(F.col(id_col).alias("__id"))
-    mode, edges = _resolve_propagation(propagate, node_ids, edges)
-    rest = None
-    if mode == "edges":
-        touched = (
-            edges.select(F.col("__src").alias("__id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        rest = node_ids.join(touched, on="__id", how="left_anti")
-        seeds = node_ids.join(touched, on="__id", how="left_semi")
-    else:
-        seeds = node_ids
-    labels = seeds.select("__id", F.col("__id").alias("__label"))
-    label_type = labels.schema["__label"].dataType
+    id_type = node_ids.schema["__id"].dataType
+    edges = pairs.select(
+        F.col("id_a").cast(id_type).alias("__a"),
+        F.col("id_b").cast(id_type).alias("__b"),
+    ).dropna()
 
-    for _ in range(max_iter):
-        neighbor_min = edges.join(
-            labels.withColumnRenamed("__id", "__src"), on="__src"
-        ).select(
-            F.col("__dst").alias("__id"),
-            "__label",
-            F.lit(None).cast(label_type).alias("__old"),
+    # Nested so cloudpickle ships it by value: Python workers need not be
+    # able to import this package.
+    def components(batches):
+        """Connected components of the ``(__a, __b)`` edge list, all of
+        it in this one task.
+
+        ``np.unique`` maps the ids to dense indices in sorted order, so
+        the smallest index of a component is its smallest id. Each pass
+        hooks every split edge's larger root onto its smaller root
+        (``np.minimum.at`` keeps the smallest candidate), then
+        pointer-jumps until every node points at its root. Roots only
+        ever hook onto smaller roots, so no cycle can form and the
+        surviving root of a component is its minimum. Edges whose
+        endpoints already share a root stay joined forever and are
+        dropped from the next pass; the loop ends when none is split.
+        Emits ``(__id, __label)`` for every id that appears in an edge.
+        """
+        import numpy as np
+        import pyarrow as pa
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        table = pa.Table.from_batches(batches)
+        arrow_type, m = table.schema.field("__a").type, table.num_rows
+        ends = np.concatenate(
+            [table.column(c).to_numpy() for c in ("__a", "__b")]
         )
-        combined = (
-            labels.withColumn("__old", F.col("__label"))
-            .unionByName(neighbor_min)
-            .groupBy("__id")
-            .agg(
-                F.min("__label").alias("__label"),
-                F.min("__old").alias("__old"),
-            )
+        del batches, table  # the Arrow input is dead weight from here on
+        ids, inv = np.unique(ends, return_inverse=True)
+        del ends
+        src, dst = inv[:m], inv[m:]
+        parent = np.arange(len(ids))
+        while True:
+            ra, rb = parent[src], parent[dst]
+            split = ra != rb
+            if not split.any():
+                break
+            src, dst, ra, rb = src[split], dst[split], ra[split], rb[split]
+            np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+            while True:
+                jumped = parent[parent]
+                if np.array_equal(jumped, parent):
+                    break
+                parent = jumped
+        yield from pa.table(
+            {
+                "__id": pa.array(ids, type=arrow_type),
+                "__label": pa.array(ids[parent], type=arrow_type),
+            }
+        ).to_batches(max_chunksize=1 << 16)
+
+    labels = edges.repartition(1).mapInArrow(
+        components,
+        StructType(
+            [StructField("__id", id_type), StructField("__label", id_type)]
+        ),
+    )
+    return (
+        node_ids.join(labels, on="__id", how="left")
+        .select(
+            F.col("__id").alias(id_col),
+            F.coalesce("__label", "__id").alias("cluster_id"),
         )
-        combined = combined.localCheckpoint(eager=True)
-        changed = (
-            combined.filter(F.col("__label") < F.col("__old"))
-            .limit(1)
-            .count()
-        )
-        labels = combined.drop("__old")
-        if changed == 0:
-            break
-    out = labels
-    if rest is not None:
-        out = out.unionByName(
-            rest.select("__id", F.col("__id").alias("__label"))
-        )
-    return out.select(
-        F.col("__id").alias(id_col), F.col("__label").alias("cluster_id")
+        .localCheckpoint(eager=True)
     )
 
 

@@ -278,8 +278,9 @@ def scale_report(df: DataFrame) -> dict:
     (WholeStageCodegen regions: more/wider spans = more of the plan runs
     fused JVM code — under AQE this reads 0 until the plan has actually
     executed, since the adaptive plan finalizes at runtime), and
-    ``python_stages`` (Arrow/pandas evaluation operators — expected for
-    mapInPandas operators, a smell elsewhere).
+    ``python_stages`` (Arrow/pandas evaluation operators — UDF evaluation,
+    mapInPandas/mapInArrow and grouped/cogrouped applyIn* — expected for
+    vectorized kernels, a smell elsewhere).
     """
     plan = df._jdf.queryExecution().executedPlan().toString()
     est: int | None
@@ -298,6 +299,8 @@ def scale_report(df: DataFrame) -> dict:
         "python_stages": sum(
             plan.count(t)
             for t in ("ArrowEvalPython", "BatchEvalPython",
-                      "MapInPandas", "FlatMapGroupsInPandas")
+                      "MapInPandas", "MapInArrow",
+                      "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+                      "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow")
         ),
     }

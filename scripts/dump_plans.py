@@ -8,7 +8,7 @@ queries when no names are given). One shared session. NOTE (r14, per
 ADVICE r13): explain itself does not execute the FINAL plan, but
 several queries pin bounded intermediates with eager localCheckpoint
 during CONSTRUCTION (cross_encoder_rerank, distillation_pairs,
-exact_rerank, the dedup_clusters loop, index builds) — dumping those
+exact_rerank, dedup_clusters' union-find, index builds) — dumping those
 plans runs the pinned stages' Spark jobs, so a full-registry dump takes
 minutes, not seconds. Queries whose construction fails get an ERROR
 file so the failure is visible in review.

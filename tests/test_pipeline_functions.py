@@ -319,8 +319,7 @@ def test_dedup_clusters_connected_components(spark):
 
 
 def test_dedup_clusters_long_chain_converges(spark):
-    """A 12-node path graph needs multiple propagation rounds — exercises
-    the convergence loop and localCheckpoint lineage truncation."""
+    """A 12-node path graph: every node reaches the chain's minimum."""
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
     n = 12
@@ -335,10 +334,62 @@ def test_dedup_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_dedup_clusters_path_longer_than_old_iteration_cap(spark):
+    """A 40-node path graph is ONE cluster. An iteration-capped label
+    propagation (25 rounds) silently split it into 15 clusters; the
+    union-find has no cap."""
+    from polars_nexpresso_spark.functions.dedup import dedup_clusters
+
+    n = 40
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
+    }
+    assert got == {i: 0 for i in range(n)}
+
+
+def test_dedup_clusters_string_ids_use_utf8_order(spark):
+    """String ids: the cluster id is the smallest id in Spark's UTF-8
+    byte order ("z" < "é"), and pair ids are cast to the nodes' type."""
+    from polars_nexpresso_spark.functions.dedup import dedup_clusters
+
+    nodes = spark.createDataFrame(
+        [("é",), ("z",), ("b",), ("a",), ("c",)], "doc_id string"
+    )
+    pairs = spark.createDataFrame(
+        [("z", "é"), ("c", "b")], "id_a string, id_b string"
+    )
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
+    }
+    assert got == {"é": "z", "z": "z", "b": "b", "c": "b", "a": "a"}
+    sql_min = spark.createDataFrame([("z",), ("é",)], "s string").agg(
+        F.min("s")
+    ).collect()[0][0]
+    assert sql_min == "z"
+
+
+def test_dedup_clusters_empty_pairs_are_singletons(spark):
+    """No pairs: every node is its own cluster."""
+    from polars_nexpresso_spark.functions.dedup import dedup_clusters
+
+    nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
+    }
+    assert got == {i: i for i in range(5)}
+
+
 def test_dedup_clusters_edge_loop_matches_full(spark):
-    """The edge-bounded propagation (r14, the 100 TB shape) is result-
-    identical to the classic full loop: singletons, a pair, and a
-    multi-round chain all land on the same (id, cluster_id) rows."""
+    """Singletons, a pair and multi-hop chains all land on the min id
+    of their component."""
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
     nodes = spark.createDataFrame([(i,) for i in range(12)], ["doc_id"])
@@ -348,24 +399,21 @@ def test_dedup_clusters_edge_loop_matches_full(spark):
     )
     expected = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5,
                 7: 7, 8: 7, 9: 7, 10: 7, 11: 7}
-    for mode in ("full", "edges", "adaptive"):
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters(
-                nodes, pairs, "doc_id", propagate=mode
-            ).collect()
-        }
-        assert got == expected, mode
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
+    }
+    assert got == expected
 
 
 def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(spark):
-    """Plan pin for the edge mode: from the second round on, every
-    checkpointed iteration frame derives ONLY from pinned (bounded)
-    blocks — the corpus never re-enters the loop, so per-iteration
-    exchanges carry ≤ 2·|pairs| rows at any scale."""
+    """Plan pin: the frame behind the one pinned result has exactly one
+    MapInArrow (the single-task union-find), and that node's subtree
+    reads only the pair input — the corpus never enters the Python
+    worker, it meets the labels in the stitch join."""
     from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
-    nodes = spark.createDataFrame([(i,) for i in range(10)], ["doc_id"])
+    nodes = spark.range(10).selectExpr("id AS doc_id")
     cls = type(nodes)  # the concrete (classic) DataFrame class
     plans: list[str] = []
     orig = cls.localCheckpoint
@@ -377,54 +425,63 @@ def test_dedup_clusters_edge_loop_iterations_are_pair_bounded(spark):
     cls.localCheckpoint = recording
     try:
         pairs = spark.createDataFrame(
-            [(0, 1), (1, 2), (2, 3), (3, 4)], ["id_a", "id_b"]
+            [(0, 1), (1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
         )
-        dedup_clusters(nodes, pairs, "doc_id", propagate="edges").collect()
+        dedup_clusters(nodes, pairs, "doc_id").collect()
     finally:
         cls.localCheckpoint = orig
-    # edges pin + touched pin + one pin per iteration (chain of 5 nodes
-    # needs several rounds); the first iteration seeds from the corpus,
-    # later ones must read only LogicalRDD (checkpointed) leaves.
-    iteration_plans = [p for p in plans if "min(" in p]
-    assert len(iteration_plans) >= 2
-    for p in iteration_plans[1:]:
-        for marker in ("LocalRelation", "Scan", "parquet"):
-            assert marker not in p, p
+    assert len(plans) == 1, plans
+    lines = plans[0].splitlines()
+    hits = [i for i, line in enumerate(lines) if "MapInArrow" in line]
+    assert len(hits) == 1, plans[0]
+    depth = len(lines[hits[0]]) - len(lines[hits[0]].lstrip(" :+-"))
+    subtree = [lines[hits[0]]]
+    for line in lines[hits[0] + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        subtree.append(line)
+    subtree = "\n".join(subtree)
+    assert "id_a" in subtree and "id_b" in subtree, subtree
+    assert "Range" not in subtree and "doc_id" not in subtree, subtree
 
 
-def test_dedup_clusters_adaptive_gate_reads_plan_stats(spark, tmp_path):
-    """The adaptive gate (r14): a KB-scale corpus keeps the classic
-    loop; with the knobs pointed at zero floor the edge loop fires on
-    the pairs-vs-corpus size ratio; stat-less inputs (LogicalRDD
-    reports defaultSizeInBytes) never fire."""
-    from polars_nexpresso_spark.functions.dedup import _resolve_propagation
+def test_dedup_clusters_matches_reference_union_find(spark):
+    """The vectorized union-find against a per-edge reference union-find
+    on 200 random multigraphs (self loops, repeated edges, isolated
+    nodes), run as one disjoint union through a single call."""
+    import random
 
-    path = str(tmp_path / "gate_nodes.parquet")
-    spark.range(200).selectExpr("id AS doc_id").write.mode(
-        "overwrite"
-    ).parquet(path)
-    ids = spark.read.parquet(path).selectExpr("doc_id AS __id")
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2)], ["id_a", "id_b"]
-    ).selectExpr("id_a AS __src", "id_b AS __dst")
+    from polars_nexpresso_spark.functions.dedup import dedup_clusters
 
-    assert _resolve_propagation("adaptive", ids, edges)[0] == "full"
-    floor_key = "spark.pns.dedupClusters.minNodesBytesForEdgeLoop"
-    frac_key = "spark.pns.dedupClusters.maxEdgesFracForEdgeLoop"
-    try:
-        spark.conf.set(floor_key, "0")
-        spark.conf.set(frac_key, "1e18")
-        assert _resolve_propagation("adaptive", ids, edges)[0] == "edges"
-        spark.conf.set(frac_key, "0")
-        assert _resolve_propagation("adaptive", ids, edges)[0] == "full"
-        spark.conf.set(frac_key, "1e18")
-        local_ids = spark.createDataFrame(
-            [(i,) for i in range(5)], ["doc_id"]
-        ).selectExpr("doc_id AS __id")
-        assert _resolve_propagation("adaptive", local_ids, edges)[0] == "full"
-    finally:
-        spark.conf.unset(floor_key)
-        spark.conf.unset(frac_key)
+    def reference(ids, edges):
+        parent = {x: x for x in ids}
+
+        def root(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = root(a), root(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return {x: root(x) for x in ids}
+
+    rng = random.Random(7)
+    ids, edges = [], []
+    for g in range(200):
+        n = rng.randint(1, 50)
+        ids += [1000 * g + i for i in range(n)]
+        edges += [
+            (1000 * g + rng.randrange(n), 1000 * g + rng.randrange(n))
+            for _ in range(rng.randint(0, 70))
+        ]
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters(nodes, pairs, "doc_id").collect()
+    }
+    assert got == reference(ids, edges)
 
 
 def test_dedup_clusters_end_to_end_with_jaccard(docs):

@@ -138,6 +138,15 @@ def test_scale_report_shape(spark):
     assert rep["estimated_input_bytes"] is None or rep[
         "estimated_input_bytes"
     ] > 0
+
+
+def test_scale_report_counts_map_in_arrow(spark):
+    """``mapInArrow`` plans as a ``MapInArrow`` node; it is a Python
+    stage like ``MapInPandas``."""
+    from polars_nexpresso_spark.plans.audit import scale_report
+
+    rep = scale_report(spark.range(3).mapInArrow(lambda it: it, "id long"))
+    assert rep["python_stages"] == 1
     # under AQE a fresh QueryExecution is never finalized, so codegen
     # spans read 0 here — informational only (docstring caveat)
     assert rep["codegen_spans"] >= 0

@@ -414,8 +414,9 @@ def test_round7_operator_shuffle_budgets(spark):
     """Round-7 operators. fixed_boilerplate and leakage_free_split = 0
     exchanges in the audited frame (fixed_boilerplate is map-side only;
     leakage_free_split's cluster labels arrive through dedup_clusters'
-    localCheckpoint, which truncates lineage — its iteration shuffles
-    are budgeted by the dedup_clusters entry itself). dedup_best_keep
+    localCheckpoint, which truncates lineage — its union-find
+    MapInArrow and pair shuffle stay behind the pin, so the audited
+    frame sees no Python stage either). dedup_best_keep
     = 2 past the checkpoint (score join + min_by election; the
     winners re-join broadcasts at this size). exact_substring_dedup
     = 3 narrow-row exchanges (occurrence count + canonical election
